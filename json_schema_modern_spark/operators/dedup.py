@@ -104,13 +104,6 @@ def poly_digest_sql(str_expr: str, base: int = POLY_B1, prime: int = POLY_P1) ->
     )
 
 
-def _md5_int(col: Column) -> Column:
-    """Stable 60-bit integer digest of a string (engine-portable: DuckDB
-    gets the same value via CAST(concat('0x', substring(md5(x),1,15)) AS
-    BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def word_shingles(text: Column, n: int = 2) -> Column:
     """n-word shingles as strings (lowercased, whitespace-tokenized)."""
     words = F.split(F.lower(F.trim(text)), r"\s+")

@@ -145,10 +145,6 @@ def numeric_histogram(
     )
 
 
-def token_length_histogram(df: DataFrame, n_buckets: int = 32, max_len: int = 2048) -> DataFrame:
-    return numeric_histogram(df, "n_tok", 0.0, float(max_len), n_buckets)
-
-
 def correlation_matrix(
     df: DataFrame,
     cols: list[str],

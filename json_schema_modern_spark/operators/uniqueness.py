@@ -2,19 +2,14 @@
 
 The reference's uniqueItems is per-array O(n²) pairwise equality
 (Utilities.pm:308-318); cross-row uniqueness of doc_id at 10^12 rows is a
-distributed problem the reference never faces.  Strategy:
-
-1. **Pre-check (cheap, no shuffle of keys):** approx_count_distinct vs
-   count.  If the HLL estimate is within its error bound of the row count,
-   duplicates may still exist, so this only short-circuits the obviously-
-   duplicate-free case when exactness isn't demanded.
-2. **Two-stage salted aggregate (exact):** groupBy(hash-salt, key) first —
-   the salt bounds any single reducer's group count even when the key
-   space is adversarially skewed (all-same-key) — then re-aggregate by key
-   over the (already tiny) candidate set.  For a genuinely unique key the
-   first stage's map-side combine collapses every group to one row, so the
-   shuffle carries ≈1 row per input row of (key, count) pairs — the minimum
-   any exact check can do — and AQE coalesces the second stage to nothing.
+distributed problem the reference never faces.  Strategy: a two-stage
+salted aggregate (exact).  groupBy(hash-salt, key) first — the salt bounds
+any single reducer's group count even when the key space is adversarially
+skewed (all-same-key) — then re-aggregate by key over the (already tiny)
+candidate set.  For a genuinely unique key the first stage's map-side
+combine collapses every group to one row, so the shuffle carries ≈1 row
+per input row of (key, count) pairs — the minimum any exact check can do —
+and AQE coalesces the second stage to nothing.
 """
 
 from __future__ import annotations
@@ -61,12 +56,3 @@ def uniqueness_violations(
         key_json.alias("offending_value"),
     )
 
-
-def probably_unique(df: DataFrame, cols: list[str], rsd: float = 0.01) -> bool:
-    """HLL pre-check: True ⇒ keys are unique within sketch error (skip the
-    exact pass when a probabilistic answer is acceptable)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(F.concat_ws("\x00", *cols), rsd=rsd).alias("d"),
-    ).first()
-    return row.d >= row.n * (1 - 3 * rsd)

@@ -10,23 +10,35 @@ resumability design follows SURVEY.md §7.5 — no reference analogue; the
 closest idea is the reference's serialization caching of the compiled
 evaluator (Modern.pm:1259-1279), applied here to the data plane.
 
-Checkpoint model (works on plain parquet; Iceberg snapshot-pinning slots in
+One ``run`` body serves both modes.  Rows are bucketed by
+``pmod(xxhash64(doc_id), n_buckets)``.  Violations of bucket-complete
+checks (row-local keywords, doc_id uniqueness, the referential semijoin)
+carry their row's bucket; violations of global checks that need all rows
+(drift per source, uniqueness on any other key) carry bucket -1.  The
+``partition_results`` rollup has one row per bucket, plus a -1 row with
+doc_count 0 only when a global check fired, so its error_count sums to
+the number of violation rows and every partition is valid exactly when
+the run has no violations.
+
+Without a workdir every output stays a lazy DataFrame.  With one, the run
+is checkpointed (works on plain parquet; Iceberg snapshot-pinning slots in
 through TableIO when a catalog exists):
 
 - a run is keyed by (snapshot_id, spec fingerprint) — same input + same
   spec ⇒ same run, mirroring the reference's MD5 document dedup
   (Modern.pm:186-197);
-- rows are bucketed by ``pmod(xxhash64(doc_id), n_buckets)``; a bucket is
-  the unit of restart.  Because the bucket key is a hash of the uniqueness
-  key, duplicate doc_ids always land in the same bucket, so the salted
-  uniqueness check is per-bucket-complete — no cross-bucket pass needed;
-- violations are written partitioned by bucket with dynamic partition
-  overwrite (idempotent re-run of a half-finished bucket);
-- a lineage row (run_id, snapshot, fingerprint, bucket, status, counts) is
-  appended only AFTER the bucket's violation write commits;
-- resume = read lineage, anti-join done buckets, process the rest;
-- global checks that need all rows (KS drift per source) run as a final
-  step recorded under bucket = -1.
+- a bucket is the unit of restart.  Because the bucket key is a hash of
+  the uniqueness key, duplicate doc_ids always land in the same bucket, so
+  the salted uniqueness check is per-bucket-complete — no cross-bucket
+  pass needed;
+- violations of the pending buckets, and of the global pass (re-done
+  whenever any bucket is), are written partitioned by bucket with dynamic
+  partition overwrite (idempotent re-run of a half-finished bucket) and
+  read back whole;
+- the rollup is collected once and written; the lineage rows (run_id,
+  snapshot, fingerprint, bucket, status, doc/error counts) take their
+  counts from it and are appended only AFTER the violation write commits;
+- resume = read lineage, skip done buckets, process the rest.
 """
 
 from __future__ import annotations
@@ -37,11 +49,12 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from json_schema_modern_spark.compiler.column_compiler import SetCheck
+from json_schema_modern_spark.compiler.column_compiler import CompiledPlan, SetCheck
 from json_schema_modern_spark.operators.drift import drift_violations, ks_drift
 from json_schema_modern_spark.operators.referential import referential_violations
 from json_schema_modern_spark.operators.stats import column_stats, numeric_histogram
@@ -52,6 +65,9 @@ VIOL_COLS = [
     "doc_id", "instance_location", "keyword_location",
     "absolute_keyword_location", "keyword", "error", "offending_value",
 ]
+VIOL_SCHEMA = ", ".join(f"{c} string" for c in VIOL_COLS) + ", bucket int"
+
+PARTITION_SCHEMA = "partition_id int, valid boolean, doc_count long, error_count long"
 
 LINEAGE_SCHEMA = (
     "run_id string, snapshot_id string, spec_fingerprint string, "
@@ -75,8 +91,10 @@ class PipelineResult:
 class ValidationPipeline:
     """Compile a spec once; run the full pass tower over a token table.
 
-    ``workdir=None`` runs everything in-memory (tests / bench); with a
-    workdir, per-bucket checkpointing and resume are active.
+    ``run`` has one path.  ``workdir=None`` returns lazy outputs; with a
+    workdir it also persists the violations, the metrics tables and the
+    per-bucket lineage (counts taken from the ``partition_results``
+    rollup), and a re-run resumes from that lineage.
     """
 
     def __init__(
@@ -93,14 +111,7 @@ class ValidationPipeline:
     ):
         self.spec = spec
         self.id_col = id_col
-        if workdir is not None and "://" in workdir and not workdir.startswith("file://"):
-            # checkpoint cleanup + lineage appends use os-level file ops;
-            # a remote URI (hdfs://, s3a://) would silently no-op the
-            # stale-partition deletes and corrupt resume semantics.
-            raise ValueError(
-                "workdir must be a local filesystem path (remote URIs are "
-                "not supported; point workdir at a shared local mount)")
-        self.workdir = workdir[7:] if workdir and workdir.startswith("file://") else workdir
+        self.workdir = None if workdir is None else _local_workdir(workdir)
         self.n_buckets = n_buckets
         self.drift_bins = drift_bins
         self.drift_hi = drift_hi
@@ -116,15 +127,7 @@ class ValidationPipeline:
         geometry from the manifest.  Compiled Column expressions are
         session-bound and re-derive lazily on first validate — the
         analogue of the reference re-adding coderefs after THAW."""
-        # same workdir normalization/validation as __init__: strip
-        # file://, reject remote URIs explicitly (otherwise the open()
-        # below fails with an opaque ENOENT on "hdfs:/..." paths)
-        if "://" in workdir and not workdir.startswith("file://"):
-            raise ValueError(
-                "workdir must be a local filesystem path (remote URIs are "
-                "not supported; point workdir at a shared local mount)")
-        if workdir.startswith("file://"):
-            workdir = workdir[7:]
+        workdir = _local_workdir(workdir)
         with open(os.path.join(workdir, "run_manifest.json")) as f:
             manifest = json.load(f)
         fp = fingerprint or manifest["spec_fingerprint"]
@@ -166,43 +169,46 @@ class ValidationPipeline:
         )
         return {r.bucket for r in rows}
 
+    def _write_manifest(self, run_id: str, snapshot_id: str, fingerprint: str) -> None:
+        with open(os.path.join(self.workdir, "run_manifest.json"), "w") as f:
+            json.dump({
+                "run_id": run_id, "snapshot_id": snapshot_id,
+                "spec_fingerprint": fingerprint, "n_buckets": self.n_buckets,
+                "id_col": self.id_col, "drift_bins": self.drift_bins,
+                "drift_hi": self.drift_hi,
+            }, f, indent=2)
+
     # -- per-bucket row-local + bucket-safe set checks ----------------------
 
-    def _bucket_violations(self, bucketed: DataFrame, source_dict: DataFrame | None) -> DataFrame:
+    def _bucket_violations(self, bucketed: DataFrame, source_dict: DataFrame | None,
+                           plan: CompiledPlan) -> list[DataFrame]:
         """All checks that are complete within a hash bucket of doc_id:
         row-local keywords, doc_id uniqueness (hash-colocated), and the
-        referential semijoin (row-local w.r.t. the broadcast dictionary)."""
+        referential semijoin (row-local w.r.t. the broadcast dictionary).
+        Each frame carries its rows' ``bucket``."""
         res = self.validator.validate(bucketed, id_cols=[self.id_col, "_bucket"])
-        viols = res.violations.select(
+        out = [res.violations.select(
             F.col(self.id_col).cast("string").alias("doc_id"),
-            *VIOL_COLS[1:], F.col("_bucket"),
-        )
-        plan = self.validator.compile_for(bucketed)
-
+            *VIOL_COLS[1:], F.col("_bucket").alias("bucket"),
+        )]
         for check in plan.set_checks:
-            extra = self._bucket_set_check(check, bucketed, source_dict)
-            if extra is not None:
-                viols = viols.unionByName(extra)
-        return viols
+            out += self._bucket_set_check(check, bucketed, source_dict)
+        return out
 
     def _bucket_set_check(
         self, check: SetCheck, bucketed: DataFrame, source_dict: DataFrame | None
-    ) -> DataFrame | None:
+    ) -> list[DataFrame]:
         val = check.params["value"]
         if check.kind == "unique":
-            cols = val if isinstance(val, list) else [val]
-            if cols != [self.id_col]:
+            if _key_cols(val) != [self.id_col]:
                 # rows are bucketed by hash(id_col); a resume over pending
                 # buckets would miss cross-bucket duplicates of any OTHER
                 # key — those checks run in the global (bucket=-1) pass
-                return None
-            out = uniqueness_violations(bucketed, cols, keyword_location=check.keyword_location)
-            # duplicates of id_col are colocated in its hash bucket
-            return out.withColumn("_bucket", _bucket_expr(F.col("doc_id"), self.n_buckets))
-        if check.kind == "ref":
-            if source_dict is None:
-                return None
-            viols = []
+                return []
+            outs = [uniqueness_violations(bucketed, [self.id_col],
+                                          keyword_location=check.keyword_location)]
+        elif check.kind == "ref" and source_dict is not None:
+            outs = []
             for fact_col, target in val.items():
                 # spec forms: "dict.col" (broadcast, the small-dim default)
                 # or {"target": "dict.col", "strategy": "sortmerge"} for
@@ -216,27 +222,26 @@ class ValidationPipeline:
                 else:
                     dim_col = target.split(".")[-1]
                     strategy = "broadcast"
-                v = referential_violations(
+                outs.append(referential_violations(
                     bucketed, fact_col, source_dict, dim_col,
                     id_col=self.id_col, keyword_location=check.keyword_location,
                     strategy=strategy,
-                ).withColumn("_bucket", _bucket_expr(F.col("doc_id"), self.n_buckets))
-                viols.append(v)
-            out = viols[0]
-            for v in viols[1:]:
-                out = out.unionByName(v)
-            return out
-        return None  # drift is global — handled in _global_violations
+                ))
+        else:
+            # drift is global (_global_violations); x-ref needs a dictionary
+            return []
+        # a duplicated or dangling doc_id sits in its own hash bucket
+        return [o.withColumn("bucket", _bucket_expr(F.col("doc_id"), self.n_buckets))
+                for o in outs]
 
-    def _global_violations(self, df: DataFrame) -> DataFrame | None:
-        """Checks needing the whole table: KS drift per group, and
-        uniqueness on keys other than id_col (not bucket-complete)."""
-        plan = self.validator.compile_for(df.drop("_bucket") if "_bucket" in df.columns else df)
+    def _global_violations(self, df: DataFrame, plan: CompiledPlan) -> list[DataFrame]:
+        """Checks needing the whole table: KS/PSI drift per group, and
+        uniqueness on keys other than id_col (not bucket-complete).  Their
+        violations carry bucket -1."""
         outs = []
         for check in plan.set_checks:
             if check.kind == "unique":
-                cols = (check.params["value"] if isinstance(check.params["value"], list)
-                        else [check.params["value"]])
+                cols = _key_cols(check.params["value"])
                 if cols != [self.id_col]:
                     outs.append(uniqueness_violations(
                         df, cols, keyword_location=check.keyword_location))
@@ -264,12 +269,7 @@ class ValidationPipeline:
                 outs.append(
                     drift_violations(d, group_col, value_col,
                                      keyword_location=check.keyword_location))
-        if not outs:
-            return None
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
+        return [o.withColumn("bucket", F.lit(-1)) for o in outs]
 
     # -- main entry ---------------------------------------------------------
 
@@ -282,136 +282,135 @@ class ValidationPipeline:
         resume: bool = True,
         stats_columns: list[str] | None = None,
     ) -> PipelineResult:
-        plan = self.validator.compile_for(df.withColumn("_bucket", F.lit(0)))
+        bucketed = df.withColumn("_bucket", _bucket_expr(F.col(self.id_col), self.n_buckets))
+        plan = self.validator.compile_for(bucketed)
         fingerprint = plan.fingerprint
         run_id = uuid.uuid4().hex[:12]
-        bucketed = df.withColumn("_bucket", _bucket_expr(F.col(self.id_col), self.n_buckets))
 
-        if self.workdir is None:
-            return self._run_inmemory(run_id, bucketed, source_dict, stats_columns)
-
-        os.makedirs(self.workdir, exist_ok=True)
-        # persist the frozen validator next to the lineage (reference
-        # serialization caching, Modern.pm:1259-1279 / README.pod CACHING):
-        # a restarted driver resumes via ``ValidationPipeline.resume_from``
-        # which thaws this file instead of re-running the traverse phase
-        plan_path = os.path.join(self.workdir, f"plan_{fingerprint}.json")
-        if not os.path.exists(plan_path):
-            self.validator.save(plan_path)
-        # manifest lands BEFORE bucket work so a crashed run is resumable
-        # (rewritten at the end with the completing run_id)
-        _write_manifest(self.workdir, run_id, snapshot_id, fingerprint,
-                        self.n_buckets, self.id_col, self.drift_bins,
-                        self.drift_hi)
-        done = self.done_buckets(spark, snapshot_id, fingerprint) if resume else set()
+        done: set[int] = set()
+        if self.workdir is not None:
+            os.makedirs(self.workdir, exist_ok=True)
+            # persist the frozen validator next to the lineage (reference
+            # serialization caching, Modern.pm:1259-1279 / README.pod
+            # CACHING): a restarted driver resumes via
+            # ``ValidationPipeline.resume_from`` which thaws this file
+            # instead of re-running the traverse phase
+            plan_path = os.path.join(self.workdir, f"plan_{fingerprint}.json")
+            if not os.path.exists(plan_path):
+                self.validator.save(plan_path)
+            # manifest lands BEFORE bucket work so a crashed run is
+            # resumable (rewritten at the end with the completing run_id)
+            self._write_manifest(run_id, snapshot_id, fingerprint)
+            if resume:
+                done = self.done_buckets(spark, snapshot_id, fingerprint)
         pending = [b for b in range(self.n_buckets) if b not in done]
+        # the global pass (bucket -1) is re-done on every run that
+        # processes any bucket
+        redo = pending + [-1] if pending or -1 not in done else []
 
-        viol_path = os.path.join(self.workdir, "violations")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
+        parts = []
         if pending:
-            sub = bucketed.filter(F.col("_bucket").isin(pending))
-            viols = self._bucket_violations(sub, source_dict)
-            # violations are partitioned by (fp, bucket): runs with a
-            # changed spec never see another fingerprint's rows, and
-            # dynamic overwrite stays scoped to this spec's partitions.
-            # Dynamic overwrite only replaces partitions that RECEIVE
-            # rows — a pending bucket whose re-run yields zero violations
-            # must still clear stale files, so drop those partition dirs
-            # explicitly first (idempotent, pre-commit: lineage marks the
-            # bucket done only after the write succeeds).
-            for b in pending:
-                shutil.rmtree(
-                    os.path.join(viol_path, f"fp={fingerprint}", f"bucket={b}"),
-                    ignore_errors=True)
-            viols.withColumnRenamed("_bucket", "bucket") \
-                .withColumn("fp", F.lit(fingerprint)) \
+            sub = (bucketed if len(pending) == self.n_buckets
+                   else bucketed.filter(F.col("_bucket").isin(pending)))
+            parts += self._bucket_violations(sub, source_dict, plan)
+        if redo:
+            parts += self._global_violations(df, plan)
+        viols = reduce(DataFrame.unionByName, parts) if parts else None
+        if self.workdir is not None:
+            viols = self._checkpoint_violations(spark, viols, fingerprint, redo)
+        stats = column_stats(df, stats_columns or [c for c in df.columns if c != "tokens"])
+        hist = (numeric_histogram(df, "n_tok", 0.0, self.drift_hi, 32)
+                if "n_tok" in df.columns else None)
+        part_res = _partition_results(bucketed, viols)
+
+        if self.workdir is not None:
+            # collect the rollup once (n_buckets + 1 rows): it is written
+            # as a metrics table and gives the lineage rows their counts
+            rollup = part_res.collect()
+            part_res = spark.createDataFrame(rollup, PARTITION_SCHEMA)
+            counts = {r.partition_id: (r.doc_count, r.error_count) for r in rollup}
+            if redo:
+                now = time.time()
+                self._append_lineage(spark, [
+                    (run_id, snapshot_id, fingerprint, b, "done",
+                     *counts.get(b, (0, 0)), now)
+                    for b in redo
+                ])
+            self._write_metrics(viols, stats, hist, part_res)
+            self._write_manifest(run_id, snapshot_id, fingerprint)
+        return PipelineResult(
+            run_id=run_id, violations=viols, stats=stats, histogram=hist,
+            partition_results=part_res,
+            buckets_done=len(pending),
+            buckets_skipped=len(done - {-1}),
+        )
+
+    def _checkpoint_violations(self, spark: SparkSession, viols: DataFrame | None,
+                               fingerprint: str, redo: list[int]) -> DataFrame:
+        """Write the violations of the buckets being (re-)done and read back
+        this spec's whole violation table."""
+        viol_path = os.path.join(self.workdir, "violations")
+        # violations are partitioned by (fp, bucket): runs with a changed
+        # spec never see another fingerprint's rows, and dynamic overwrite
+        # stays scoped to this spec's partitions.  Dynamic overwrite only
+        # replaces partitions that RECEIVE rows — a pending bucket whose
+        # re-run yields zero violations must still clear stale files, so
+        # drop those partition dirs explicitly first (idempotent,
+        # pre-commit: lineage marks the bucket done only after the write
+        # succeeds).
+        fp_dir = os.path.join(viol_path, f"fp={fingerprint}")
+        for b in redo:
+            shutil.rmtree(os.path.join(fp_dir, f"bucket={b}"), ignore_errors=True)
+        if viols is not None:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            viols.withColumn("fp", F.lit(fingerprint)) \
                 .write.mode("overwrite").partitionBy("fp", "bucket").parquet(viol_path)
-            per_bucket = (
-                sub.groupBy("_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            counts = {r._bucket: r.n for r in per_bucket}
-            now = time.time()
-            self._append_lineage(spark, [
-                (run_id, snapshot_id, fingerprint, b, "done",
-                 counts.get(b, 0), None, now)
-                for b in pending
-            ])
-
-        # global pass (drift, non-id uniqueness) — bucket -1, re-done on
-        # every completing run
-        gv = self._global_violations(df)
-        if pending or -1 not in done:
-            shutil.rmtree(
-                os.path.join(viol_path, f"fp={fingerprint}", "bucket=-1"),
-                ignore_errors=True)
-            if gv is not None:
-                gv.withColumn("bucket", F.lit(-1)).withColumn("fp", F.lit(fingerprint)) \
-                    .write.mode("overwrite").partitionBy("fp", "bucket").parquet(viol_path)
-            self._append_lineage(spark, [
-                (run_id, snapshot_id, fingerprint, -1, "done", 0, None, time.time())
-            ])
-
         # read this spec's partition subtree directly (never sibling
         # fingerprints' files); a fully-clean run writes no partition files
         # at all — that is an empty violations table, not an error (the CLI
         # must exit 0).  Any OTHER read failure (corrupt files, permission)
         # must propagate: treating it as "no violations" would report a
         # dirty dataset as valid.
-        fp_dir = os.path.join(viol_path, f"fp={fingerprint}")
         has_files = any(
             f.endswith(".parquet")
             for _, _, files in os.walk(fp_dir) for f in files)
         if has_files:
-            all_viols = spark.read.parquet(fp_dir)
-        else:
-            all_viols = spark.createDataFrame(
-                [], ", ".join(f"{c} string" for c in VIOL_COLS) + ", bucket int")
-        stats = column_stats(df, stats_columns or [c for c in df.columns if c != "tokens"])
-        hist = (numeric_histogram(df, "n_tok", 0.0, self.drift_hi, 32)
-                if "n_tok" in df.columns else None)
-        part_res = _partition_results(bucketed, all_viols)
-        # metrics tables (north rule: per-partition lineage + metrics):
-        # column stats, value histogram, per-bucket pass/fail rollup — tiny
-        # outputs, coalesced to one file each
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.workdir, "stats"))
-        if hist is not None:
-            hist.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.workdir, "histogram"))
-        part_res.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.workdir, "partition_results"))
-        # per-keyword violation rollup — the "which checks fire, how often"
-        # metrics table (tiny: ≤ #keyword-locations rows)
-        all_viols.groupBy("keyword", "keyword_location") \
-            .agg(F.count(F.lit(1)).alias("n_violations")) \
-            .coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.workdir, "violation_counts"))
-        _write_manifest(self.workdir, run_id, snapshot_id, fingerprint,
-                        self.n_buckets, self.id_col, self.drift_bins,
-                        self.drift_hi)
-        return PipelineResult(
-            run_id=run_id, violations=all_viols, stats=stats, histogram=hist,
-            partition_results=part_res,
-            buckets_done=len(pending),
-            buckets_skipped=len({b for b in done if b >= 0}),
-        )
+            return spark.read.parquet(fp_dir)
+        return spark.createDataFrame([], VIOL_SCHEMA)
 
-    def _run_inmemory(self, run_id, bucketed, source_dict, stats_columns) -> PipelineResult:
-        df = bucketed.drop("_bucket")
-        viols = self._bucket_violations(bucketed, source_dict).drop("_bucket")
-        gv = self._global_violations(df)
-        if gv is not None:
-            viols = viols.unionByName(gv)
-        stats = column_stats(df, stats_columns or [c for c in df.columns if c != "tokens"])
-        hist = (numeric_histogram(df, "n_tok", 0.0, self.drift_hi, 32)
-                if "n_tok" in df.columns else None)
-        return PipelineResult(
-            run_id=run_id, violations=viols, stats=stats, histogram=hist,
-            partition_results=_partition_results(bucketed, viols.withColumn(
-                "bucket", _bucket_expr(F.col("doc_id"), self.n_buckets))),
-            buckets_done=self.n_buckets,
-        )
+    def _write_metrics(self, viols: DataFrame, stats: DataFrame,
+                       hist: DataFrame | None, part_res: DataFrame) -> None:
+        """Metrics tables (north rule: per-partition lineage + metrics):
+        column stats, value histogram, per-bucket pass/fail rollup and the
+        per-keyword violation rollup — the "which checks fire, how often"
+        table.  All tiny, coalesced to one file each."""
+        tables = {
+            "stats": stats,
+            "histogram": hist,
+            "partition_results": part_res,
+            "violation_counts": viols.groupBy("keyword", "keyword_location")
+            .agg(F.count(F.lit(1)).alias("n_violations")),
+        }
+        for name, table in tables.items():
+            if table is not None:
+                table.coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(self.workdir, name))
+
+
+def _local_workdir(workdir: str) -> str:
+    """Strip ``file://``.  Checkpoint cleanup and lineage appends use
+    os-level file ops, so a remote URI (hdfs://, s3a://) would silently
+    no-op the stale-partition deletes and corrupt resume semantics (and
+    ``resume_from`` would fail with an opaque ENOENT on "hdfs:/...")."""
+    if "://" in workdir and not workdir.startswith("file://"):
+        raise ValueError(
+            "workdir must be a local filesystem path (remote URIs are "
+            "not supported; point workdir at a shared local mount)")
+    return workdir.removeprefix("file://")
+
+
+def _key_cols(value) -> list[str]:
+    return value if isinstance(value, list) else [value]
 
 
 def _bucket_expr(col, n_buckets: int):
@@ -420,30 +419,15 @@ def _bucket_expr(col, n_buckets: int):
 
 def _partition_results(bucketed: DataFrame, viols: DataFrame) -> DataFrame:
     """partition_results(partition_id, valid, doc_count, error_count) where
-    the partition unit is the checkpoint bucket."""
-    bcol = "bucket" if "bucket" in viols.columns else "_bucket"
-    per_bucket_docs = bucketed.groupBy(F.col("_bucket").alias("partition_id")) \
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    per_bucket_errs = viols.filter(F.col(bcol) >= 0) \
-        .groupBy(F.col(bcol).alias("partition_id")) \
-        .agg(F.count(F.lit(1)).alias("error_count"))
+    the partition unit is the checkpoint bucket: one row per bucket, plus
+    partition -1 (doc_count 0) when a global check fired.  error_count
+    sums to the number of violation rows."""
+    docs = bucketed.select(F.col("_bucket").alias("partition_id"), F.lit(1).alias("_doc"))
+    errs = viols.select(F.col("bucket").alias("partition_id"), F.lit(0).alias("_doc"))
     return (
-        per_bucket_docs.join(per_bucket_errs, "partition_id", "left")
-        .select(
-            "partition_id",
-            F.coalesce("error_count", F.lit(0)).alias("error_count"),
-            "doc_count",
-        )
-        .withColumn("valid", F.col("error_count") == 0)
-        .select("partition_id", "valid", "doc_count", "error_count")
+        docs.unionByName(errs).groupBy("partition_id")
+        .agg(F.sum("_doc").alias("doc_count"),
+             F.sum(1 - F.col("_doc")).alias("error_count"))
+        .select("partition_id", (F.col("error_count") == 0).alias("valid"),
+                "doc_count", "error_count")
     )
-
-
-def _write_manifest(workdir, run_id, snapshot_id, fingerprint, n_buckets,
-                    id_col="doc_id", drift_bins=256, drift_hi=2048.0) -> None:
-    with open(os.path.join(workdir, "run_manifest.json"), "w") as f:
-        json.dump({
-            "run_id": run_id, "snapshot_id": snapshot_id,
-            "spec_fingerprint": fingerprint, "n_buckets": n_buckets,
-            "id_col": id_col, "drift_bins": drift_bins, "drift_hi": drift_hi,
-        }, f, indent=2)

@@ -228,6 +228,9 @@ class SchemaRegistry:
     # dialect each root was walked under — identifier rules differ per
     # draft, so content dedup only applies within the same dialect
     root_dialects: dict[str, str] = field(default_factory=dict)
+    # (keyword, pointer) of every registered custom-vocabulary keyword the
+    # walk met at a keyword position
+    custom_keywords: list[tuple[str, str]] = field(default_factory=list)
 
     def add_schema(self, schema: Any, default_uri: str = "",
                    legacy_id: bool = False, dialect: str | None = None) -> str:
@@ -402,7 +405,10 @@ class SchemaRegistry:
         )
         if has_vocabularies():
             for ckw, (_voc, ks) in registered_keywords().items():
-                if ckw in node and ks.traverse is not None:
+                if ckw not in node:
+                    continue
+                self.custom_keywords.append((ckw, pointer))
+                if ks.traverse is not None:
                     try:
                         ks.traverse(node[ckw])
                     except ValueError as exc:

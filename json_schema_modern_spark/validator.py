@@ -221,24 +221,26 @@ class Validator:
         self._plan_cache: dict[str, CompiledPlan] = {}
         self._frozen_index: dict | None = None  # set by thaw()
 
-    def _registry(self):
+    def _spec_dialect(self) -> str:
+        from json_schema_modern_spark.compiler.column_compiler import _detect_dialect
+        from json_schema_modern_spark.spec.resolver import SpecError
+
+        try:
+            return _detect_dialect(self.spec)
+        except SpecError:
+            return "2020-12"
+
+    def _registry(self, thaw: bool = True):
+        from json_schema_modern_spark.compiler.column_compiler import _DIALECT_URIS
         from json_schema_modern_spark.spec.resolver import SchemaRegistry
 
-        if self._frozen_index is not None:
+        if thaw and self._frozen_index is not None:
             # THAW path (Modern.pm:1268-1279): the resource index was
             # serialized after the traverse phase, so relink instead of
             # re-walking the documents; compile_for's add_schema of the
             # spec then hits the content-dedup fast path and skips too
             return SchemaRegistry.thaw(self._frozen_index)
-        from json_schema_modern_spark.compiler.column_compiler import (
-            _DIALECT_URIS, _detect_dialect,
-        )
-        from json_schema_modern_spark.spec.resolver import SpecError
-
-        try:
-            default_dialect = _detect_dialect(self.spec)
-        except SpecError:
-            default_dialect = "2020-12"
+        default_dialect = self._spec_dialect()
         reg = SchemaRegistry()
         for entry in self.extra_schemas:
             uri, schema = entry if isinstance(entry, tuple) else ("", entry)
@@ -251,6 +253,25 @@ class Validator:
                 d = _DIALECT_URIS.get(schema["$schema"].rstrip("#"))
             reg.add_schema(schema, uri, dialect=d or default_dialect)
         return reg
+
+    def _reject_custom_keywords(self, tier: str) -> None:
+        """The python tier runs in executor workers, which never see a
+        driver-side ``register_vocabulary``, and ``pyeval.full`` has no
+        custom-keyword hook: refuse rather than pass such keywords
+        silently.  The registry walk finds them at keyword positions only
+        (a property NAMED like one is not a keyword)."""
+        from json_schema_modern_spark.spec.resolver import SpecError
+        from json_schema_modern_spark.spec.vocabulary import has_vocabularies
+
+        if not has_vocabularies():
+            return
+        reg = self._registry(thaw=False)
+        reg.add_schema(self.spec, "", dialect=self._spec_dialect())
+        if reg.custom_keywords:
+            kw, ptr = reg.custom_keywords[0]
+            raise SpecError(
+                f"custom keyword {kw!r} (at {ptr or '/'}) is not supported by "
+                f"tier={tier!r}; use tier='columns'")
 
     def compile_for(self, df: DataFrame) -> CompiledPlan:
         key = df.schema.simpleString()
@@ -427,7 +448,13 @@ class Validator:
         lost nothing.  Cost: the routing predicate parses the JSON twice
         more on the bulk — use plain ``columns`` when provenance
         guarantees the shape.  ``annotated`` carries id columns + _valid
-        + _viols only (the two tiers' decoded columns differ)."""
+        + _viols only (the two tiers' decoded columns differ).
+
+        ``python`` and ``hybrid`` raise ``SpecError`` when the spec uses a
+        keyword of a registered custom vocabulary, which only the
+        ``columns`` tier evaluates."""
+        if tier in ("python", "hybrid"):
+            self._reject_custom_keywords(tier)
         if tier == "python":
             return self._validate_json_python(df, json_col, id_cols)
         if tier == "hybrid":
@@ -546,21 +573,14 @@ class Validator:
         once, keyed by fingerprint."""
         import json as _json
 
-        from json_schema_modern_spark.compiler.column_compiler import (
-            _DIALECT_URIS, _detect_dialect,
-        )
+        from json_schema_modern_spark.compiler.column_compiler import _DIALECT_URIS
         from json_schema_modern_spark.pyeval.distributed import (
             evaluate_json_column,
         )
-        from json_schema_modern_spark.spec.resolver import (
-            SpecError, spec_fingerprint,
-        )
+        from json_schema_modern_spark.spec.resolver import spec_fingerprint
 
         id_cols = id_cols or ([df.columns[0]] if df.columns else [])
-        try:
-            dialect = _detect_dialect(self.spec)
-        except SpecError:
-            dialect = "2020-12"
+        dialect = self._spec_dialect()
         extra = []
         for entry in self.extra_schemas:
             uri, schema = entry if isinstance(entry, tuple) else ("", entry)

@@ -88,6 +88,13 @@ def test_metrics_tables_persisted(spark, corrupt, tmp_path):
     assert {r.column for r in stats.collect()} == {"doc_id", "n_tok", "source"}
     pr = spark.read.parquet(os.path.join(wd, "partition_results"))
     assert pr.count() == 4 and pr.filter("NOT valid").count() > 0
+    # lineage counts come from the persisted rollup (bucket -1 included)
+    lineage = {r.bucket: (r.doc_count, r.error_count)
+               for r in spark.read.parquet(os.path.join(wd, "lineage")).collect()}
+    assert set(lineage) == {-1, 0, 1, 2, 3}
+    rollup = {r.partition_id: (r.doc_count, r.error_count) for r in pr.collect()}
+    assert all(None not in c for c in lineage.values())
+    assert lineage == {b: rollup.get(b, (0, 0)) for b in lineage}
 
 
 def test_sortmerge_ref_strategy(spark, corrupt):
@@ -121,9 +128,17 @@ def test_non_id_uniqueness_runs_global(spark, corrupt, tmp_path):
     uv = res.violations.filter(F.col("keyword") == "x-unique")
     assert uv.count() > 0
     assert {r.bucket for r in uv.select("bucket").distinct().collect()} == {-1}
-    # in-memory path agrees on the duplicate-key set
-    mem = ValidationPipeline(spec).run(spark, corrupt, source_dict=source_dict_df(spark))
+    # the in-memory run agrees row for row, and both rollups account
+    # every violation (the global ones under partition -1)
+    mem = ValidationPipeline(spec, n_buckets=8).run(
+        spark, corrupt, source_dict=source_dict_df(spark))
     assert mem.violations.filter(F.col("keyword") == "x-unique").count() == uv.count()
+    assert sorted(mem.violations.collect(), key=repr) == \
+        sorted(res.violations.collect(), key=repr)
+    parts = sorted(res.partition_results.collect())
+    assert sorted(mem.partition_results.collect()) == parts
+    assert sum(r.error_count for r in parts) == res.violations.count()
+    assert parts[0].partition_id == -1 and parts[0].doc_count == 0
 
 
 def test_changed_spec_no_stale_violations(spark, tmp_path):
@@ -154,3 +169,35 @@ def test_bucket_unit_is_doc_id_hash(spark, corrupt, tmp_path):
     per_key = dup_viols.groupBy("doc_id").count().filter("count > 1")
     assert per_key.count() == 0
     assert dup_viols.count() > 0
+
+
+def test_resume_after_crash(spark, corrupt, tmp_path, monkeypatch):
+    """A run that dies after its violation write but before the lineage
+    commit leaves no bucket marked done: the resumed run redoes every
+    bucket and ends with exactly an uninterrupted run's violations."""
+    sd = source_dict_df(spark)
+    key = ("doc_id", "keyword_location", "offending_value", "bucket")
+
+    def rows(res):
+        return sorted(res.violations.select(*key).collect(), key=repr)
+
+    clean = ValidationPipeline(SPEC, workdir=str(tmp_path / "clean"), n_buckets=8) \
+        .run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    wd = str(tmp_path / "crash")
+    orig = ValidationPipeline._append_lineage
+
+    def crash_once(self, *a, **kw):
+        monkeypatch.setattr(ValidationPipeline, "_append_lineage", orig)
+        raise RuntimeError("driver lost")
+
+    monkeypatch.setattr(ValidationPipeline, "_append_lineage", crash_once)
+    with pytest.raises(RuntimeError, match="driver lost"):
+        ValidationPipeline(SPEC, workdir=wd, n_buckets=8) \
+            .run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert os.path.exists(os.path.join(wd, "violations"))
+    assert not os.path.exists(os.path.join(wd, "lineage"))
+
+    resumed = ValidationPipeline(SPEC, workdir=wd, n_buckets=8) \
+        .run(spark, corrupt, source_dict=sd, snapshot_id="s", resume=True)
+    assert resumed.buckets_done == 8 and resumed.buckets_skipped == 0
+    assert rows(resumed) == rows(clean)

@@ -1,6 +1,8 @@
 """Custom vocabulary plug-in (add_vocabulary seam, Modern.pm:940-956):
 registered vocabularies participate in strict mode, $vocabulary
-enforcement and BOTH evaluation tiers (Spark compiler + pyeval)."""
+enforcement, the Spark compiler and the test-only subset evaluator
+(``pyeval.evaluator``).  The executor-side python tier of
+``validate_json_strings`` cannot see them and refuses such specs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,6 +134,26 @@ def test_both_tiers_agree(spark, even_vocab):
     for i, n in rows:
         assert spark_valid[i] == evaluate(
             {"properties": {"n": {"evenValue": False}}}, {"n": n}), i
+
+
+def test_json_python_tiers_refuse_custom_keyword(spark, even_vocab):
+    # executor workers never see a driver-side register_vocabulary and
+    # pyeval.full has no custom-keyword hook: fail loudly, don't pass {"n":3}
+    from json_schema_modern_spark.validator import Validator
+
+    df = spark.createDataFrame(
+        [(1, '{"n":3}'), (2, '{"n":3,"extra":null}'), (3, '{"n":2}')],
+        "doc_id int, payload string")
+    v = Validator({"properties": {"n": {"type": "integer", "evenValue": True}}})
+    for tier in ("python", "hybrid"):
+        with pytest.raises(SpecError, match="evenValue.*/properties/n"):
+            v.validate_json_strings(df, "payload", ["doc_id"], tier=tier)
+    bad = v.validate_json_strings(df, "payload", ["doc_id"], tier="columns")
+    assert sorted(r.doc_id for r in bad.violations.collect()) == [1, 2]
+    # a property merely NAMED like the keyword is not a keyword position
+    named = Validator({"properties": {"evenValue": {"type": "integer"}}})
+    assert named.validate_json_strings(
+        df, "payload", ["doc_id"], tier="python").flag()
 
 
 def test_traverse_runs_in_unreferenced_defs_branch(even_vocab):
